@@ -31,7 +31,7 @@ more negative than -180 text-space units are treated as an inter-word
 gap (the standard heuristic for extracting spaces from kerned text).
 Pages are joined with a newline.
 
-Shared by the Spark pandas-UDF branch (operators/extract.pdf_branch)
+Shared by the Spark dom+pdf stage (operators/extract.dom_pdf_branch)
 and the tests, so byte-parity is by construction — the same contract
 as functions/domstrip.py.
 """
@@ -719,7 +719,7 @@ def extract_pdf_text(data: bytes, password: bytes | str = b"",
     Standard-handler RC4/AES encryption with an empty user password
     (permissions-only locking) and Flate/LZW predictors decode for
     real; `password` supplies a non-empty USER password (the freq_dict
-    config pattern — threaded through pdf_branch/extract_pages).
+    config pattern — threaded through dom_pdf_branch/extract_pages).
 
     Quarantine granularity is PER CONTENT STREAM for font-resolution
     failures (UnresolvedFontError): a mixed document with one

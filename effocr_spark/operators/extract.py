@@ -1,5 +1,5 @@
 """Spark extraction operators: the OCR branch (fused mapInPandas stage)
-and the DOM branch (scalar pandas UDF).
+and the combined dom+pdf stage for born-digital pages (dom_pdf_branch).
 
 Design (SURVEY.md §3.1): the reference's three thread-pool stages
 (localize → transform → recognize, infer_effocr_onnx_multi.py:234-364)
@@ -463,33 +463,17 @@ def ocr_spans_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
     return df.select("url", "html", "lang").mapInPandas(fn, OCR_SPANS_SCHEMA)
 
 
-def _strip_html_series(html: pd.Series) -> pd.Series:
-    """Vectorized DOM-heuristic main-content extraction."""
-    return html.map(lambda b: strip_html(bytes(b)) if b is not None else "")
-
-
-def dom_branch(df: DataFrame) -> DataFrame:
-    """(url, html) pages → same output schema as the OCR branch."""
-    # UDF constructed lazily: pandas_udf return-type parsing needs an
-    # active SparkSession, so module import must stay session-free
-    strip_udf = F.pandas_udf(_strip_html_series, "string")
-    return df.select(
-        "url",
-        strip_udf(F.col("html")).alias("extracted_text"),
-        F.lit(0).alias("n_chars"),
-        F.lit(True).alias("ok"),
-        F.lit(None).cast("string").alias("error"),
-    )
-
-
 def is_image_page(html_col):
     """JVM-side content sniff: PNG, JPEG or JPEG2000 magic prefix (no
     Python UDF; the reference's *.png + *.jpg glob, S1, plus the JP2
-    scans archive digitizations ship)."""
-    return ((F.substring(html_col, 1, 8) == F.lit(PNG_MAGIC))
-            | (F.substring(html_col, 1, 3) == F.lit(JPEG_MAGIC))
-            | (F.substring(html_col, 5, 4) == F.lit(b"jP  "))
-            | (F.substring(html_col, 1, 2) == F.lit(b"\xff\x4f")))
+    scans archive digitizations ship). Null-safe: a NULL html is False,
+    so `~is_image_page` routes it to dom_pdf_branch instead of neither
+    side of the split dropping it."""
+    return html_col.isNotNull() & (
+        (F.substring(html_col, 1, 8) == F.lit(PNG_MAGIC))
+        | (F.substring(html_col, 1, 3) == F.lit(JPEG_MAGIC))
+        | (F.substring(html_col, 5, 4) == F.lit(b"jP  "))
+        | (F.substring(html_col, 1, 2) == F.lit(b"\xff\x4f")))
 
 
 def is_pdf_page(html_col):
@@ -596,59 +580,22 @@ def pdf_image_rows(df: DataFrame,
         explode_batches, EMBEDDED_SCHEMA)
 
 
-def pdf_branch(df: DataFrame,
-               pdf_password: bytes | str = b"") -> DataFrame:
-    """(url, html=PDF bytes) pages → same output schema as the other
-    branches. The extractor (functions/pdftext.py) handles uncompressed
-    and FlateDecode content streams pure-stdlib; encrypted/exotic PDFs
-    quarantine into ok=False rows (never crash the job). `pdf_password`
-    unlocks true-password documents (job-level config, the freq_dict
-    pattern — a corpus crawled from one provider shares one password)."""
-    from ..functions.pdftext import extract_pdf_text
-
-    def pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, texts, oks, errs = [], [], [], []
-            for url, data in zip(pdf["url"], pdf["html"]):
-                try:
-                    stats: dict = {}
-                    texts.append(extract_pdf_text(bytes(data),
-                                                  password=pdf_password,
-                                                  stats=stats))
-                    oks.append(True)
-                    # partial extraction is flagged, never silent: the
-                    # dropped-stream count rides the error column as a
-                    # warning while ok stays True
-                    nq = stats.get("quarantined_streams", 0)
-                    errs.append(f"pdf: {nq} stream(s) quarantined "
-                                f"(unresolved font)" if nq else None)
-                except Exception as e:
-                    texts.append(None)
-                    oks.append(False)
-                    errs.append(f"pdf: {e!r}"[:200])
-                urls.append(url)
-            yield pd.DataFrame({
-                "url": urls, "extracted_text": texts,
-                "n_chars": [0] * len(urls), "ok": oks, "error": errs,
-            })
-
-    return df.select("url", "html").mapInPandas(pdf_batches, OCR_OUT_SCHEMA)
-
-
 def dom_pdf_branch(df: DataFrame,
                    pdf_password: bytes | str = b"") -> DataFrame:
     """Both non-image branches in ONE Python stage over the ~is_image
     rows, routed per row by the same %PDF- prefix the JVM sniff uses —
     emits OCR_OUT_SCHEMA plus the `branch` label ('pdf'/'dom').
 
-    Why: the 3-way router scans the pages table once per branch; at
-    bench scale the separate dom and pdf stages cost a second full scan
-    of the non-image majority plus a fleet of near-empty Python task
-    launches for whichever branch is sparse (a pure-HTML crawl slice
-    pays ~0.4s of empty pdf tasks per pass at local[32]). Per-row
-    semantics are EXACTLY dom_branch/pdf_branch (same strip_html call,
-    same quarantine shape, same ok/error values) — pinned by
-    tests/test_pdf_branch.py::test_dom_pdf_branch_matches_split_branches."""
+    One stage instead of separate dom and pdf stages: one scan of the
+    non-image majority, and no fleet of near-empty Python tasks for
+    whichever kind is sparse in the corpus slice. Per row: a PDF is
+    extract_pdf_text (ok=False with the error on failure, a warning in
+    `error` when streams were quarantined); anything else, NULL
+    included, is strip_html (NULL → ""). Pinned by
+    tests/test_pdf_branch.py::test_dom_pdf_branch_matches_plain_functions.
+    `pdf_password` unlocks true-password documents (job-level config,
+    the freq_dict pattern — a corpus crawled from one provider shares
+    one password)."""
     from ..functions.pdftext import extract_pdf_text
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -234,8 +234,12 @@ def _srp_neardup_pairs_arrow(df: DataFrame, vec_col: str, id_col: str,
 
     id_type = df.schema[id_col].dataType.simpleString()
     bucket = _srp_bucket_col(df, vec_col, n_planes, seed, dim)
-    tagged = df.select(F.col(id_col), F.col(vec_col),
-                       bucket.alias("bucket"))
+    # a NULL vector hashes to a NULL bucket: the self-join path never
+    # pairs it (NULL keys don't join), and the grouped stage would fail
+    # on it, so drop it here
+    tagged = (df.select(F.col(id_col), F.col(vec_col),
+                        bucket.alias("bucket"))
+              .filter(F.col("bucket").isNotNull()))
     if max_bucket_size is not None:
         from pyspark.sql import Window
 

@@ -1,12 +1,16 @@
-"""End-to-end extraction pipeline: route → OCR | DOM → fuse.
+"""End-to-end extraction pipeline: route → OCR | DOM+PDF → fuse.
+
+The one router: batch callers, the streaming skin (streaming.py) and
+the chunked lineage runner (lineage.py) all extract through
+extract_pages.
 
 Dataflow (SURVEY.md §3.1 "Spark lifecycle"):
 
     pages ──sniff(html magic, JVM-side)──┬─ image pages ─ salted
                                          │   repartition ─ fused OCR
                                          │   mapInPandas stage
-                                         └─ born-digital ─ strip_html
-                                             pandas UDF
+                                         └─ born-digital ─ dom+pdf
+                                             mapInPandas stage
     branches are DISJOINT by construction (every row routes exactly one
     way), so the per-url fusion is a unionByName — same result as the
     full-outer-join+coalesce spelling but with zero shuffle.
@@ -75,8 +79,9 @@ def extract_pages(
     (url, extracted_text, n_chars, ok, error, branch).
 
     Three-way content routing by JVM-side magic-byte sniff (no Python in
-    the router): PNG → OCR, %PDF → PDF layout parse, else → DOM strip.
-    Branches are disjoint by construction, so fusion stays a
+    the router): PNG/JPEG/JP2 → OCR, %PDF → PDF layout parse, else
+    (NULL html included) → DOM strip. Every row routes exactly one
+    way, so fusion stays a
     unionByName (zero shuffles outside the salted OCR repartition)."""
     image_rows = pages.filter(is_image_page(F.col("html")))
     other_rows = pages.filter(~is_image_page(F.col("html")))
@@ -94,8 +99,7 @@ def extract_pages(
                      word_silver=word_silver, freq_dict=freq_dict,
                      emit_char_text=emit_char_text)
     # both non-image branches run in ONE Python stage (per-row %PDF-
-    # routing inside the UDF — semantics pinned equal to the split
-    # dom_branch/pdf_branch): one scan of the non-image majority
+    # routing inside the UDF): one scan of the non-image majority
     # instead of two, and no near-empty task fleet for whichever
     # branch is sparse in the corpus slice
     other = dom_pdf_branch(other_rows, pdf_password=pdf_password)
@@ -193,14 +197,3 @@ def extract_pages(
         other = _fuse(other)
 
     return ocr.withColumn("branch", F.lit("ocr")).unionByName(other)
-
-
-def run(spark: SparkSession, pages: DataFrame, out_path: str | None = None,
-        **kwargs) -> DataFrame:
-    """Convenience wrapper: broadcast prototypes, extract, optionally sink."""
-    protos_bc = broadcast_prototypes(spark)
-    result = extract_pages(pages, protos_bc, **kwargs)
-    if out_path:
-        result.write.mode("overwrite").parquet(out_path)
-        return spark.read.parquet(out_path)
-    return result

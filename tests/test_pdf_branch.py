@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from effocr_spark.functions.pdftext import extract_pdf_text, is_pdf
-from effocr_spark.operators.extract import is_pdf_page, pdf_branch
+from effocr_spark.operators.extract import is_pdf_page
 from effocr_spark.pipeline import extract_pages
 from effocr_spark.synth.pdfgen import make_pdf
 
@@ -42,7 +42,8 @@ def test_pdf_quarantine_paths():
 
 
 def test_pipeline_three_way_routing(spark, protos_bc):
-    """PNG → ocr, %PDF → pdf, else → dom; per-branch ok/error columns."""
+    """PNG → ocr, %PDF → pdf, else → dom; per-branch ok/error columns.
+    A NULL html is neither image nor PDF: it comes out as one dom row."""
     from effocr_spark.synth.pages import pages_df
 
     pages, _ = pages_df(spark, 30, seed=42)
@@ -55,15 +56,19 @@ def test_pipeline_three_way_routing(spark, protos_bc):
         # the other standard text-stream filters decode for real
         ("pdf://bad/1", None, b"%PDF-1.4\n<< /Filter /JBIG2Decode >>\n"
                               b"stream\nxx\nendstream", None, "en"),
+        ("null://html", None, None, None, "en"),
     ]
     extra = spark.createDataFrame(
-        [(u, t, bytearray(h), x, l) for u, t, h, x, l in pdf_rows],
+        [(u, t, None if h is None else bytearray(h), x, l)
+         for u, t, h, x, l in pdf_rows],
         "url string, warc_ts timestamp, html binary, text string, lang string")
     all_pages = pages.select("url", "warc_ts", "html", "text", "lang") \
         .unionByName(extra)
-    res = {r["url"]: r for r in
-           extract_pages(all_pages, protos_bc).collect()}
-    assert len(res) == 33
+    out = extract_pages(all_pages, protos_bc).collect()
+    res = {r["url"]: r for r in out}
+    assert len(out) == len(res) == 34
+    assert [tuple(r) for r in out if r["url"] == "null://html"] == \
+        [("null://html", "", 0, True, None, "dom")]
     assert res["pdf://good/1"]["branch"] == "pdf"
     assert res["pdf://good/1"]["ok"]
     assert res["pdf://good/1"]["extracted_text"] == "Alpha beta gamma\nDelta"
@@ -350,15 +355,16 @@ def test_aes_known_answer_and_encrypted_pdf():
     assert extract_pdf_text(blob) == "AES locked page\nsecond line"
 
 
-def test_dom_pdf_branch_matches_split_branches(spark, protos_bc):
-    """The combined non-image stage must emit EXACTLY the rows of the
-    separate dom_branch + pdf_branch (urls, texts, n_chars, ok, error)
-    with the right branch labels — healthy HTML, gzip HTML, healthy
-    PDF, corrupt PDF."""
+def test_dom_pdf_branch_matches_plain_functions(spark, protos_bc):
+    """The combined non-image stage must emit, per row, exactly what a
+    driver-side call of the plain functions gives: strip_html for
+    non-PDF bytes, extract_pdf_text for %PDF- bytes (ok=False with the
+    error string when it raises) — healthy HTML, gzip HTML, healthy
+    PDF, corrupt PDF — with the right branch labels."""
     import zlib
 
-    from effocr_spark.operators.extract import (dom_branch, dom_pdf_branch,
-                                                pdf_branch)
+    from effocr_spark.functions.domstrip import strip_html
+    from effocr_spark.operators.extract import dom_pdf_branch
     from effocr_spark.synth.pdfgen import make_encrypted_pdf, make_pdf
 
     html = b"<html><body><p>plain paragraph text here</p></body></html>"
@@ -369,21 +375,21 @@ def test_dom_pdf_branch_matches_split_branches(spark, protos_bc):
     pdf_bad = (make_encrypted_pdf([["x"]], r=4)
                .replace(b"/V 4 /R 4", b"/V 5 /R 6")
                .replace(b"/CFM /AESV2", b"/CFM /AESV3"))
-    rows = [("u://dom", bytearray(html)), ("u://gz", bytearray(gzipped)),
-            ("u://pdf", bytearray(pdf_ok)), ("u://bad", bytearray(pdf_bad))]
-    df = spark.createDataFrame(rows, "url string, html binary")
+    rows = [("u://dom", html), ("u://gz", gzipped),
+            ("u://pdf", pdf_ok), ("u://bad", pdf_bad)]
+    df = spark.createDataFrame([(u, bytearray(b)) for u, b in rows],
+                               "url string, html binary")
 
-    combined = {r["url"]: tuple(r) for r in
-                dom_pdf_branch(df).collect()}
-    from pyspark.sql import functions as F
-    split = {}
-    for r in dom_branch(df.filter(~(F.substring("html", 1, 5)
-                                    == F.lit(b"%PDF-")))).collect():
-        split[r["url"]] = tuple(r) + ("dom",)
-    for r in pdf_branch(df.filter(F.substring("html", 1, 5)
-                                  == F.lit(b"%PDF-"))).collect():
-        split[r["url"]] = tuple(r) + ("pdf",)
-    assert combined == split
+    def expected(url, data):
+        if data[:5] != b"%PDF-":
+            return (url, strip_html(data), 0, True, None, "dom")
+        try:
+            return (url, extract_pdf_text(data), 0, True, None, "pdf")
+        except Exception as e:
+            return (url, None, 0, False, f"pdf: {e!r}"[:200], "pdf")
+
+    combined = {r["url"]: tuple(r) for r in dom_pdf_branch(df).collect()}
+    assert combined == {u: expected(u, b) for u, b in rows}
     assert combined["u://pdf"][1] == "pdf line one\npdf line two"
     assert combined["u://bad"][3] is False  # ok flag
     assert combined["u://dom"][5] == "dom"

@@ -146,10 +146,12 @@ def test_srp_neardup_arrow_pairs_bit_identical(spark):
     EXACT rows of the JVM self-join path — same pairs AND bit-identical
     double scores (the NumPy kernel reproduces the zip_with/left-fold
     accumulation order via cumsum). Random vectors, cap active, a low
-    threshold so thousands of pairs cross the comparison."""
+    threshold so thousands of pairs cross the comparison. Two NULL
+    vectors share a NULL bucket: the self-join never pairs them, and
+    the grouped stage must drop them rather than fail the job."""
     rng = np.random.RandomState(11)
     rows = [(int(i), [float(x) for x in rng.standard_normal(16)])
-            for i in range(300)]
+            for i in range(300)] + [(300, None), (301, None)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     kw = dict(threshold=0.1, n_planes=3, dim=16, max_bucket_size=80)
     jvm = sorted(map(tuple, sim.srp_neardup_pairs(

@@ -13,20 +13,38 @@ def _collect_results(spark, out_dir):
 
 
 def test_stream_extract_matches_batch(spark, protos_bc, tmp_path):
+    """Every route (ocr, dom, pdf — a good and a quarantining PDF — and
+    a NULL html) comes out of the stream as it does out of batch."""
+    from effocr_spark.synth.pdfgen import make_pdf
+
     pages_dir = str(tmp_path / "pages")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
     pages, _ = pages_df(spark, 80, seed=42)
-    pages.write.mode("overwrite").parquet(pages_dir)
+    extra = spark.createDataFrame(
+        [("pdf://good", None, bytearray(make_pdf([["Streamed pdf text"]])),
+          None, "en"),
+         ("pdf://bad", None, bytearray(b"%PDF-1.4\n<< /Filter /JBIG2Decode"
+                                       b" >>\nstream\nxx\nendstream"),
+          None, "en"),
+         ("null://html", None, None, None, "en")],
+        streaming.PAGES_DDL)
+    pages.unionByName(extra).write.mode("overwrite").parquet(pages_dir)
 
     q = streaming.stream_extract(spark, pages_dir, out_dir, ckpt, protos_bc)
     q.awaitTermination(300)
+    out = spark.read.parquet(out_dir)
+    assert out.count() == 83
     got = _collect_results(spark, out_dir)
 
     batch = pipeline.extract_pages(spark.read.parquet(pages_dir), protos_bc)
     exp = {r["url"]: (r["extracted_text"], r["branch"]) for r in batch.collect()}
     assert got == exp
+    assert got["pdf://good"] == ("Streamed pdf text", "pdf")
+    assert got["null://html"] == ("", "dom")
+    bad = out.filter(out.url == "pdf://bad").collect()
+    assert [(r["branch"], r["ok"]) for r in bad] == [("pdf", False)]
 
 
 def test_stream_extract_incremental_resume(spark, protos_bc, tmp_path):
